@@ -1151,7 +1151,7 @@ def _zone_series_from_orders(spark, sf, zones=50, tail=24):
 
 
 def q_model_gp_forecast(spark, sf):
-    """M2 — per-zone Gaussian-process forecast (applyInPandas): last
+    """M2 — per-zone Gaussian-process forecast (mapInPandas): last
     in-sample point + 16/32/48-day horizons per zone. Deterministic
     (exact posterior mean, no SVI seed sensitivity)."""
     from lswms_forage_etl_spark.models.gp import gp_forecast
@@ -1159,7 +1159,7 @@ def q_model_gp_forecast(spark, sf):
 
 
 def q_model_hindcast_lag(spark, sf):
-    """W2/W3 — expanding-window GP refits per zone (applyInPandas) pivoted
+    """W2/W3 — expanding-window GP refits per zone (mapInPandas) pivoted
     into the lag matrix."""
     from lswms_forage_etl_spark.operators.hindcast import (
         hindcast_tall, lag_matrix)

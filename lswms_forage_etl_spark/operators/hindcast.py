@@ -5,17 +5,18 @@ halfway index (capped at min(100, n/2) refits, :43), fit the GP on rows
 [:cut] and predict 4 horizons; horizon h is stored diagonally at row cut+h,
 column h — yielding the '0/16/32/48 day lag time' matrix (:67-69, 91-94).
 
-Engine form: one `applyInPandas` per zone emits TALL rows
-(zone_id, date, horizon_days, value); the diagonal positional write becomes
-a keyed pivot — fragile index arithmetic replaced by (zone, date, horizon)
-keys (SURVEY §2.4 J5). Zones parallelize; each group's refit loop is
-internal numpy (the same cut-point semantics, no cross-zone state).
+Engine form: the series arrive in one-row-per-zone form
+(`models.gp.zone_series_arrays`: zone_id plus date-sorted `dates` and
+`biomass` arrays), and one `mapInPandas` pass (`models.gp.fit_zones`) runs
+every zone's refit loop in numpy (the same cut-point semantics, no
+cross-zone state), emitting TALL rows (zone_id, date, horizon_days, value).
+The diagonal positional write becomes a keyed pivot — fragile index
+arithmetic replaced by (zone, date, horizon) keys (SURVEY §2.4 J5).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -23,7 +24,11 @@ from pyspark.sql.types import (
     DateType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-from lswms_forage_etl_spark.models.gp import HORIZON_DAYS, gp_posterior_mean
+from lswms_forage_etl_spark.models.gp import (
+    HORIZON_DAYS,
+    fit_zones,
+    gp_posterior_mean,
+)
 
 HINDCAST_SCHEMA = StructType([
     StructField("zone_id", StringType(), False),
@@ -35,32 +40,22 @@ HINDCAST_SCHEMA = StructType([
 MAX_REFITS = 100  # reference cap min(100, n/2) at BiomassHindcasts.py:43
 
 
-def _hindcast_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.dropna(subset=["biomass"]).sort_values("date")
-    n = len(pdf)
+def _hindcast_fit(x: np.ndarray, y: np.ndarray) -> list:
+    """Expanding-window refits from the halfway index (:38-39); zones with
+    fewer than 4 points emit nothing."""
+    n = len(x)
     if n < 4:
-        return pd.DataFrame(columns=[f.name for f in HINDCAST_SCHEMA.fields])
-    dates = pd.to_datetime(pdf["date"])
-    x = (dates - dates.iloc[0]).dt.days.to_numpy(float)
-    y = pdf["biomass"].to_numpy(float)
-    start = n // 2                       # halfway index (:38-39)
-    n_refits = min(MAX_REFITS, n - start)
-    rows = []
-    zone = pdf["zone_id"].iloc[0]
-    for cut in range(start, start + n_refits):
+        return []
+    fits = []
+    for cut in range(n // 2, n // 2 + min(MAX_REFITS, n - n // 2)):
         xs = np.array([x[cut - 1] + h for h in (0, *HORIZON_DAYS)])
-        mean = gp_posterior_mean(x[:cut], y[:cut], xs)
-        for h, m in zip((0, *HORIZON_DAYS), mean):
-            rows.append((zone,
-                         (dates.iloc[0] + pd.Timedelta(days=int(x[cut - 1] + h))).date(),
-                         int(h), float(m)))
-    return pd.DataFrame(rows, columns=[f.name for f in HINDCAST_SCHEMA.fields])
+        fits.append((xs, gp_posterior_mean(x[:cut], y[:cut], xs)))
+    return fits
 
 
 def hindcast_tall(zone_series: DataFrame) -> DataFrame:
     """W2 — tall (zone_id, date, horizon_days, value) hindcast rows."""
-    return (zone_series.where(F.col("biomass").isNotNull())
-            .groupBy("zone_id").applyInPandas(_hindcast_group, HINDCAST_SCHEMA))
+    return fit_zones(zone_series, _hindcast_fit, HINDCAST_SCHEMA)
 
 
 def lag_matrix(tall: DataFrame) -> DataFrame:

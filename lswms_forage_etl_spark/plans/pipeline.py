@@ -25,6 +25,7 @@ preserved as first-class orchestrator features:
 from __future__ import annotations
 
 import datetime as dt
+import time
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -34,6 +35,7 @@ from lswms_forage_etl_spark.functions.cleansing import (
     biomass_calibration,
     conditional_zero_jitter,
 )
+from lswms_forage_etl_spark.functions.grid import snap_cell
 from lswms_forage_etl_spark.models.gp import gp_forecast
 from lswms_forage_etl_spark.models.gwr import gwr_fit_score
 from lswms_forage_etl_spark.operators.composite import (
@@ -66,6 +68,7 @@ class StageResult:
     name: str
     status: str          # 'ok' | 'skipped' | 'failed'
     reason: str = ""
+    wall_s: float = 0.0  # empty-guard + stage fn, driver wall clock
 
 
 @dataclass
@@ -83,21 +86,26 @@ class Pipeline:
         then re-raises — the orchestrator never swallows errors."""
         self.results = []
         for st in self.stages:
+            t0 = time.perf_counter()
+
+            def done(status: str, reason: str = "") -> None:
+                self.results.append(StageResult(
+                    st.name, status, reason, time.perf_counter() - t0))
+
             missing = [r for r in st.requires
                        if r not in ctx or ctx[r].isEmpty()]
             if missing:
-                self.results.append(StageResult(
-                    st.name, "skipped", f"empty/missing inputs: {missing}"))
+                done("skipped", f"empty/missing inputs: {missing}")
                 continue
             try:
                 updates = st.fn(spark, ctx)
             except Exception as exc:
-                self.results.append(StageResult(st.name, "failed", str(exc)))
+                done("failed", str(exc))
                 if self.on_failure is not None:
                     self.on_failure(st.name, exc)
                 raise
             ctx.update(updates or {})
-            self.results.append(StageResult(st.name, "ok"))
+            done("ok")
         return ctx
 
 
@@ -126,19 +134,30 @@ def forage_pipeline(series_start: dt.date, current_date: dt.date,
         return {"periods": periods_df(spark, series_start, current_date)}
 
     def st_extract(spark, ctx):
-        periods = ctx["periods"]
-        per_var = {}
+        # One extraction pass. The period table is collected once for the
+        # three composites, and each raster is cut down to the cells under
+        # points (broadcast left_semi on the snapped (row, col)) BEFORE
+        # compositing, so only sampled cells are aggregated and shuffled —
+        # exact, since the inner join to points drops every other cell and
+        # a semi join never duplicates rows. The merged point table is
+        # persisted so the jitter precheck reads it instead of re-deriving
+        # (and re-scanning) the whole extraction.
+        periods = [(r["period_id"], r["start"], r["end"])
+                   for r in ctx["periods"].collect()]
+        point_cells = F.broadcast(
+            snap_cell(ctx["points"]).select("row", "col"))
+        per_var = []
         for name, agg in (("ndvi", "mean"), ("sm", "mean"), ("preci", "sum")):
+            cells = ctx[f"{name}_cells"].join(
+                point_cells, ["row", "col"], "left_semi")
             comp = (mean_composite if agg == "mean" else sum_composite)(
-                ctx[f"{name}_cells"], periods)
+                cells, periods)
             sampled = sample_raster_at_points(ctx["points"], comp)
-            out_col = f"value_{agg}"
-            per_var[name] = sampled.select(
-                "lon", "lat", "date", F.col(out_col).alias(name))
-        combined = merge_point_tables(
-            [per_var["ndvi"], per_var["sm"], per_var["preci"]])
+            per_var.append(sampled.select(
+                "lon", "lat", "date", F.col(f"value_{agg}").alias(name)))
+        merged = track(merge_point_tables(per_var).persist())
         combined = conditional_zero_jitter(
-            combined, "preci", ["lon", "lat", "date"])
+            merged, "preci", ["lon", "lat", "date"])
         # stage hand-off tables are materialization points (the reference
         # writes each to CSV/HDF5, §1.4): persist so downstream stages —
         # and multiple consumers of ctx — never recompute the upstream

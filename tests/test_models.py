@@ -8,9 +8,14 @@ import datetime as dt
 import numpy as np
 from pyspark.sql import functions as F
 
-from lswms_forage_etl_spark.models.gp import gp_forecast, gp_posterior_mean
+from lswms_forage_etl_spark.models.gp import (
+    HORIZON_DAYS,
+    gp_forecast,
+    gp_posterior_mean,
+)
 from lswms_forage_etl_spark.models.gwr import gwr_fit_score
 from lswms_forage_etl_spark.operators.hindcast import (
+    MAX_REFITS,
     hindcast_tall,
     lag_matrix,
     tail_k_per_group,
@@ -63,6 +68,72 @@ def test_hindcast_tall_and_lag_matrix(spark):
         F.col("lag_0_day").isNotNull() & F.col("lag_16_day").isNotNull()
         & F.col("lag_32_day").isNotNull() & F.col("lag_48_day").isNotNull())
     assert full.count() > 0
+
+
+def _ragged_series(spark):
+    """Zones with 1, 2, 3, 4 and 9 observations (some NULL), each starting
+    on its own date, rows shuffled."""
+    rows = []
+    for z, (n, start, null_at) in enumerate([
+            (1, dt.date(2023, 3, 1), ()),
+            (3, dt.date(2023, 1, 5), (1,)),      # 2 points after F6
+            (3, dt.date(2022, 12, 20), ()),
+            (5, dt.date(2023, 2, 2), (0,)),      # 4 points after F6
+            (9, dt.date(2023, 1, 1), (2, 6))]):  # 7 points after F6
+        for i in range(n):
+            d = start + dt.timedelta(days=16 * i + (i % 3))
+            v = None if i in null_at else float(0.3 + 0.1 * np.cos(i + z))
+            rows.append((f"Z{z}", d, v))
+    rows.append(("Z5", dt.date(2023, 1, 1), None))     # all-NULL zone
+    rows = [rows[i] for i in np.random.RandomState(1).permutation(len(rows))]
+    return spark.createDataFrame(
+        rows, "zone_id string, date date, biomass double"), rows
+
+
+def _reference_fits(rows):
+    """Per-zone gp_posterior_mean calls on the sorted non-NULL series:
+    (forecast rows, tall hindcast rows)."""
+    zones = {}
+    for z, d, v in rows:
+        if v is not None:
+            zones.setdefault(z, []).append((d, v))
+    fc, hc = set(), set()
+    steps = (0, *HORIZON_DAYS)
+    for z, pts in zones.items():
+        pts.sort()
+        t0 = pts[0][0]
+        x = np.array([(d - t0).days for d, _ in pts], dtype=float)
+        y = np.array([v for _, v in pts])
+        n = len(pts)
+        if n >= 2:
+            xs = np.array([x[-1] + h for h in steps])
+            m = np.round(gp_posterior_mean(x, y, xs), 4)
+            fc |= {(z, t0 + dt.timedelta(days=int(a)), h, float(b))
+                   for a, h, b in zip(xs, steps, m)}
+        if n >= 4:
+            for cut in range(n // 2, n // 2 + min(MAX_REFITS, n - n // 2)):
+                xs = np.array([x[cut - 1] + h for h in steps])
+                m = gp_posterior_mean(x[:cut], y[:cut], xs)
+                hc |= {(z, t0 + dt.timedelta(days=int(a)), h, float(b))
+                       for a, h, b in zip(xs, steps, m)}
+    return fc, hc
+
+
+def test_zone_models_bit_identical_to_per_zone_reference(spark):
+    df, rows = _ragged_series(spark)
+    want_fc, want_hc = _reference_fits(rows)
+    got_fc = [tuple(r) for r in gp_forecast(df).collect()]
+    got_hc = [tuple(r) for r in hindcast_tall(df).collect()]
+    # zones with >= 2 / >= 4 non-NULL points only, no duplicate rows
+    assert {r[0] for r in got_fc} == {"Z1", "Z2", "Z3", "Z4"}
+    assert {r[0] for r in got_hc} == {"Z3", "Z4"}
+    assert len(got_fc) == len(set(got_fc)) == 16
+    assert len(got_hc) == len(set(got_hc)) == 4 * (2 + 4)
+    assert set(got_fc) == want_fc          # exact float equality
+    assert set(got_hc) == want_hc
+    empty = df.where(F.lit(False))
+    assert gp_forecast(empty).collect() == []
+    assert hindcast_tall(empty).collect() == []
 
 
 def test_tail_k(spark):

@@ -4,11 +4,22 @@ pipeline end-to-end on a synthetic fixture + §2.10 incremental streaming."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from lswms_forage_etl_spark import schemas
+from lswms_forage_etl_spark.functions.cleansing import conditional_zero_jitter
+from lswms_forage_etl_spark.lifecycle import release_tracked
+from lswms_forage_etl_spark.operators.composite import (
+    mean_composite,
+    sum_composite,
+)
+from lswms_forage_etl_spark.operators.joins import (
+    merge_point_tables,
+    sample_raster_at_points,
+)
 from lswms_forage_etl_spark.plans import Pipeline, Stage, forage_pipeline
 from lswms_forage_etl_spark.streaming import (
     complete_periods_only,
@@ -31,6 +42,22 @@ def test_pipeline_empty_guard_cascade(spark):
     p.run(spark, {})
     assert calls == ["a"]
     assert [r.status for r in p.results] == ["ok", "skipped", "skipped"]
+    assert all(r.wall_s > 0 for r in p.results)
+
+
+def test_pipeline_results_carry_wall_time_without_jobs(spark):
+    tracker = spark.sparkContext.statusTracker()
+    p = Pipeline(stages=[
+        Stage("slow", lambda s, c: time.sleep(0.05) or
+              {"x": s.createDataFrame([(1,)], "i int")}),
+        Stage("lazy", lambda s, c: {"y": c["x"].where("i > 0")}),
+    ])
+    before = len(tracker.getJobIdsForGroup(None))
+    p.run(spark, {})
+    assert len(tracker.getJobIdsForGroup(None)) == before
+    slow, lazy = p.results
+    assert slow.wall_s >= 0.05
+    assert 0 < lazy.wall_s < slow.wall_s
 
 
 def test_pipeline_failure_hook(spark):
@@ -92,6 +119,60 @@ def test_forage_pipeline_end_to_end(spark):
     assert len(fc) == 2 * 4       # last + 3 horizons per zone
     man = {r["filename"] for r in out["manifest"].collect()}
     assert len(man) == 2 and all(f.startswith("biomass_") for f in man)
+
+
+def test_extract_reads_each_raster_once_and_matches_unfused(spark):
+    """`combined` materializes with ONE pass over each raster input (rows
+    counted as they are read), and equals compositing each whole raster
+    first, then sampling it at the points."""
+    sc = spark.sparkContext
+    grid = [(r, c) for r in range(5) for c in range(5)]
+    pts = [(36.0 + 0.05 * c + 0.02, 15.0 - 0.05 * r - 0.02) for r, c in grid
+           if (r + c) % 2 == 0]
+    pts += [(36.071, 14.979),            # same cell (0, 1) as ...
+            (36.079, 14.971),            # ... this point
+            (30.0, 14.98)]               # outside the grid
+    points = spark.createDataFrame(pts, "lon double, lat double")
+    raw = {"ndvi": _obs_cells(spark, 0.3), "sm": _obs_cells(spark, 0.2),
+           # no rain, so the jitter precheck fires
+           "preci": _obs_cells(spark, 1.0).withColumn("value", F.lit(0.0))}
+    reads = {}
+
+    def counted(name):
+        acc = reads[name] = sc.accumulator(0)
+
+        def count_rows(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+        return raw[name].mapInPandas(count_rows, raw[name].schema)
+
+    ctx = {f"{v}_cells": counted(v) for v in raw}
+    ctx["points"] = points
+    start, current = dt.date(2024, 1, 1), dt.date(2024, 2, 2)
+    pipe = forage_pipeline(start, current)
+    pipe.stages = pipe.stages[:2]                  # periods, extract
+    out = pipe.run(spark, ctx)
+    for acc in reads.values():
+        acc.value = 0                              # drop the guard's reads
+    got = sorted(tuple(r) for r in out["combined"].collect())
+    n_rows = {v: raw[v].count() for v in raw}
+    assert {v: a.value for v, a in reads.items()} == n_rows
+
+    periods = periods_df(spark, start, current)
+    per_var = []
+    for v, comp in (("ndvi", mean_composite), ("sm", mean_composite),
+                    ("preci", sum_composite)):
+        sampled = sample_raster_at_points(points, comp(raw[v], periods))
+        per_var.append(sampled.select(
+            "lon", "lat", "date", F.col(sampled.columns[-1]).alias(v)))
+    want = sorted(tuple(r) for r in conditional_zero_jitter(
+        merge_point_tables(per_var), "preci",
+        ["lon", "lat", "date"]).collect())
+    release_tracked()
+    assert len(got) == 2 * (13 + 2)       # both same-cell points kept
+    assert got == want
+    assert any(0 < r[-1] < 0.02 for r in got)      # jitter applied
 
 
 def test_complete_periods_gate(spark):

@@ -31,9 +31,10 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SNAPSHOT_DEFAULT = "/root/repo/METRICS_sf001.jsonl"
+SNAPSHOT_DEFAULT = os.path.join(ROOT, "METRICS_sf001.jsonl")
 
 
 def _api(base: str, path: str):

@@ -15,10 +15,11 @@ documented re-index rule).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from lswms_forage_etl_spark import get_spark, lifecycle

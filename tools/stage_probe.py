@@ -12,10 +12,11 @@ Usage: python tools/stage_probe.py <sf_dir> <query> [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _api(base: str, path: str):
