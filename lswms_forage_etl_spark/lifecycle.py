@@ -1,9 +1,10 @@
-"""Stage-table lifecycle: deterministic release of persisted intermediates.
+"""Stage-table lifecycle: staging rules and deterministic release of
+persisted intermediates.
 
 Operators that self-join a derived table MUST materialize it first (the
 measured double-eval hazards in `operators/dedup.py` / `similarity.py`),
 but a lazily-returned result means the operator cannot unpersist before
-the caller's consuming action. The contract (VERDICT r4 item 6):
+the caller's consuming action. The release contract (VERDICT r4 item 6):
 
 - every operator/query persist() (and localCheckpoint cleanup) is
   registered with `track(...)` at the call site;
@@ -18,17 +19,47 @@ attachments on a DataFrame are lost by ANY derivation (`.where`,
 to "since the last release" — callers interleaving independent
 pipelines should release at their own pipeline boundaries.
 
+Staging (`stage_table`, `stage_lazy`) follows two rules, enforced here:
+
+1. Counts chain per thread. Every `stage_table` count, async or sync,
+   waits for the previous count staged on the same thread, so a stage
+   table derived from an earlier one reads its parent's cache (racing
+   counts were measured by the r15 stage probe as four duplicate ~8 s
+   5-gram explode stages behind kn5). A
+   `stage_lazy` link is covered only by the next count staged on its
+   own thread. Count threads are unbounded (a chained wait inside a
+   bounded pool can deadlock) and inherit the job group of the thread
+   that staged them.
+2. One barrier before every action. `await_staged()` waits for every
+   in-flight count; the query registry (`__spark_entry__.queries`)
+   ends each query's construction with it, so no action starts against
+   a cold cache (r15 measured ten broadcast builds racing one cold
+   cache behind kn5), and `release_tracked()` awaits before it
+   unpersists. A count still running after `COUNT_TIMEOUT_S` raises
+   `CountInFlight`: a hang is reported as a hang, and the pending lazy
+   links stay in place as evidence.
+
 At 100 TB scale these persists become parquet stage tables with explicit
 TTLs; this module is the local-mode equivalent of that discipline.
 """
 
 from __future__ import annotations
 
+import threading
+import time
 from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 _TRACKED: list = []
+# since the last release: (staging thread, count thread) per async
+# count, and (staging thread, plan description) per stage_lazy link no
+# landed count has covered yet (matched by identity)
+_COUNTS: list[tuple[threading.Thread, threading.Thread]] = []
+_LAZY: list[tuple[threading.Thread, str]] = []
+_LOCK = threading.Lock()
+COUNT_TIMEOUT_S = 600.0
 
 H = TypeVar("H")
 
@@ -42,9 +73,15 @@ def track(handle: H) -> H:
 
 
 def release_tracked() -> int:
-    """Unpersist every tracked stage table / run every tracked cleanup,
-    oldest first. Returns the number of handles released. Idempotent —
-    unpersisting an already-released table is a no-op."""
+    """Await in-flight counts, then unpersist every tracked stage table /
+    run every tracked cleanup, oldest first. Returns the number of
+    handles released. Idempotent — unpersisting an already-released
+    table is a no-op. Never raises (release must not mask results): a
+    hung count is the barrier's to report."""
+    try:
+        await_staged()
+    except CountInFlight:
+        pass
     n = 0
     for h in _TRACKED:
         try:
@@ -56,10 +93,12 @@ def release_tracked() -> int:
         except Exception:  # noqa: BLE001 — release must never mask results
             pass
     _TRACKED.clear()
-    # pending-lazy entries die with their query's lifecycle window —
+    # counts and pending links die with their query's lifecycle window —
     # without this, bench runs (which never assert) would accumulate
-    # stale ids across queries
-    _LAZY_PENDING.clear()
+    # them across queries
+    with _LOCK:
+        _COUNTS.clear()
+        _LAZY.clear()
     return n
 
 
@@ -129,31 +168,35 @@ def should_materialize_eagerly(df: DataFrame) -> bool:
     return plan_size_estimate(df) >= EAGER_STATS_THRESHOLD_BYTES
 
 
-_COUNT_THREADS: dict[int, object] = {}
-"""id(staged df) -> its in-flight async count thread (r15). Cleared by
-release_tracked() via the tracked join callables; entries are only read
-by stage_table(after=...) within one operator's construction window."""
-
-_LAZY_PENDING: dict[int, str] = {}
-"""id(stage_lazy df) -> short plan description, while the lazy link has
-NOT yet been covered by a downstream counted stage_table (r16, VERDICT
-r15 item 7). stage_lazy's safety is a calling convention — no join may
-be planned against an uncounted interior link (the round-5 stats-lie
-hazard) and a counted chain tail must materialize it — and this registry
-makes the second half programmatic: a stage_lazy link that no subsequent
-stage_table count ever covers stays pending, and the oracle gate fails
-the query (`assert_no_unresolved_lazy`). Coverage is lexical: a
-stage_table call snapshots the currently-pending ids and clears them
-when its count LANDS (the count job materializes every ancestor cache;
-all current call sites stage their lazies immediately before their chain
-tail). The in-between hazard — a join planned against a pending link
-before the tail count lands — is a planning-time event this post-hoc
-check cannot see; the backstop enforces the structural half of the
-contract."""
+class CountInFlight(AssertionError):
+    """A staged count that had not landed when a barrier's timeout ran
+    out: a hang, not an uncovered stage_lazy link. An AssertionError so
+    gates that count assertion failures count this one too."""
 
 
-def stage_table(df: DataFrame, sync: bool | None = None,
-                after: DataFrame | None = None) -> DataFrame:
+def _describe(df: DataFrame) -> str:
+    try:
+        return df._jdf.queryExecution().logical().nodeName()
+    except Exception:  # noqa: BLE001 — description is best-effort
+        return "?"
+
+
+def _await(counts: list[threading.Thread]) -> None:
+    deadline = time.monotonic() + COUNT_TIMEOUT_S
+    for t in counts:
+        t.join(max(0.0, deadline - time.monotonic()))
+    late = [t.name for t in counts if t.is_alive()]
+    if late:
+        raise CountInFlight(
+            f"count still in flight after {COUNT_TIMEOUT_S:g} s: {late}")
+
+
+def _cover(links: list) -> None:
+    with _LOCK:
+        _LAZY[:] = [x for x in _LAZY if not any(x is c for c in links)]
+
+
+def stage_table(df: DataFrame, sync: bool | None = None) -> DataFrame:
     """Persist + EAGERLY materialize + track a stage table.
 
     Eager, not lazy, because materialization points must carry accurate
@@ -170,12 +213,9 @@ def stage_table(df: DataFrame, sync: bool | None = None,
     run anyway at first consumption.
 
     Unlike `_ckpt_tracked` (operators/dedup.py), this stays eager at
-    EVERY scale: the round-7 A/B that made checkpoints adaptive also
-    measured lazy stage tables LOSING at sf0.1 (text_contamination
-    1.1 s eager vs 2.3 s lazy) — with a lazy persist the
-    InMemoryRelation's child-derived estimate (255 KB) sat under the
-    broadcast threshold, so the planner BROADCAST the ~50 MB-real
-    shingle table into each consumer join.
+    EVERY scale: lazy stage tables LOST even at sf0.1 in the round-7
+    A/B (text_contamination 1.1 s eager vs 2.3 s lazy) — the 255 KB
+    child estimate made the planner broadcast a ~50 MB-real table.
 
     Whether the count BLOCKS is scale-adaptive (same estimate gate as
     `_ckpt_tracked`): below the threshold it runs on a BACKGROUND
@@ -187,62 +227,31 @@ def stage_table(df: DataFrame, sync: bool | None = None,
     reach their action while the cache is still materializing — the
     racing evaluations cost more than the serialization (measured:
     text_eval_overlap at the 100x slice, 12.0 s sync vs 20.9 s async).
-    For the async path, stats stay correct for planning because
-    physical planning (where the join planner reads IMR stats) happens
-    at the caller's ACTION, after the short count lands; a mis-planned
-    lost race is bounded — a table big enough for a mis-broadcast to
-    hurt has a child estimate above the broadcast threshold, so the
-    stale estimate still picks the safe shuffle plan. The thread
-    handle is tracked so release_tracked() joins it before unpersist.
-
-    `after` (r15): CHAINED stage tables — when this table DERIVES from
-    another staged table, two independent async counts race and the
-    child's count re-evaluates the parent's whole subtree from source
-    (the round-6 lazy-race lesson, stage_table-chain variant: the r15
-    stage probe measured FOUR duplicate ~8 s 5-gram explode stages
-    behind text_perplexity_kn5). Passing the parent handle makes this
-    table's count wait for the parent's count first, so each chain link
-    reads its parent's materialized cache: no duplicated work (the
-    at-scale / low-core-count win) and no driver serialization (a
-    sync=True chain measured +0.7 s at sf0.1 — the counts' job walls
-    serialize into the query wall)."""
-    import threading
-
-    out = df.persist()
+    Either way the count first waits for the previous count staged on
+    this thread, and covers this thread's pending stage_lazy links when
+    it lands (module docstring, rule 1)."""
+    out = track(df.persist())
     if sync is None:
         sync = should_materialize_eagerly(df)
-    # this count covers every CURRENTLY-pending stage_lazy link (all
-    # call sites stage interior links immediately before their chain
-    # tail, so the pending set is exactly this chain's ancestors)
-    covered = list(_LAZY_PENDING)
+    me = threading.current_thread()
+    with _LOCK:
+        covers = [x for x in _LAZY if x[0] is me]
+        prev = [t for s, t in _COUNTS if s is me][-1:]
+
+    def _count() -> None:
+        _await(prev)
+        out.count()
+        _cover(covers)
+
     if sync:
-        track(out)
-        out.count()
-        for k in covered:
-            _LAZY_PENDING.pop(k, None)
+        _count()
         return out
-    parent_t = (_COUNT_THREADS.get(id(after))
-                if after is not None else None)
-
-    def _run() -> None:
-        if parent_t is not None:
-            parent_t.join(timeout=600)
-        out.count()
-        for k in covered:
-            _LAZY_PENDING.pop(k, None)
-
-    t = threading.Thread(target=_run, daemon=True)
+    t = threading.Thread(
+        target=inheritable_thread_target(out.sparkSession)(_count),
+        name=f"stage_table {_describe(df)}", daemon=True)
+    with _LOCK:
+        _COUNTS.append((me, t))
     t.start()
-    _COUNT_THREADS[id(out)] = t
-
-    def _finish(out_id: int = id(out)) -> None:
-        t.join(timeout=600)
-        _COUNT_THREADS.pop(out_id, None)
-
-    # join tracked BEFORE the persist handle: release_tracked() runs
-    # oldest-first, and the in-flight count must land before unpersist
-    track(_finish)
-    track(out)
     return out
 
 
@@ -251,68 +260,49 @@ def stage_lazy(df: DataFrame) -> DataFrame:
     of a staged derivation chain whose TAIL is a counted `stage_table`
     (r15): computing any InMemoryRelation partition caches it as a side
     effect, so one count of the chain tail materializes every parent
-    cache in the SAME job. The per-link count jobs the `after=` chain
-    used to run added only driver round-trips (4 jobs → 1 for the kn5
+    cache in the SAME job (4 count jobs → 1 for the kn5
     c5→cont4→cont3→cont2 chain). Safe ONLY when (a) a downstream
     stage_table's count covers this table before any consumer action
     plans against it (its stats are then real), and (b) no join is
     planned against it in between (the round-5 lazy stats-lie hazard).
-    Callers must still `await_staged` the chain tail. Misuse of (a) is
-    caught programmatically: the link registers as PENDING and only a
-    subsequent stage_table's landed count clears it — the oracle gate
-    fails any query that leaves a lazy link uncovered
+    Misuse of (a) is caught programmatically: the link stays PENDING
+    until the next count staged on this thread lands, and the oracle
+    gate fails any query that leaves a lazy link uncovered
     (`assert_no_unresolved_lazy`)."""
-    out = df.persist()
-    track(out)
-    try:
-        desc = df._jdf.queryExecution().logical().nodeName()
-    except Exception:  # noqa: BLE001 — description is best-effort
-        desc = "?"
-    _LAZY_PENDING[id(out)] = desc
+    out = track(df.persist())
+    with _LOCK:
+        _LAZY.append((threading.current_thread(), _describe(df)))
     return out
 
 
-def await_staged(df: DataFrame) -> DataFrame:
-    """Block until `df`'s async stage_table count has landed (no-op for
-    sync-staged or unstaged frames). Call at the END of an operator's
-    construction when the returned plan has MANY concurrent consumers
-    of the staged table (broadcast-build futures + AQE stages): each
-    concurrent consumer of a still-cold cache recomputes its partitions
-    independently (in-flight cache-partition computation is not shared
-    across jobs), so ten broadcast builds racing one cold cache cost
-    ten evaluations of its subtree — the r15 stage probe measured ~50 s
-    of duplicated executor work behind text_perplexity_kn5's ten
-    lookup builds. Awaiting here overlaps the count with the caller's
-    plan construction (unlike sync=True, which serializes it before
-    any construction) and guarantees consumers find warm blocks."""
-    t = _COUNT_THREADS.get(id(df))
-    if t is not None:
-        t.join(timeout=600)
-    return df
+def await_staged() -> None:
+    """The barrier: block until every in-flight stage_table count has
+    landed; raise `CountInFlight` if one has not within
+    `COUNT_TIMEOUT_S`. The query registry calls it at the end of every
+    query's construction (module docstring, rule 2)."""
+    with _LOCK:
+        counts = [t for _, t in _COUNTS]
+    _await(counts)
 
 
 def assert_no_unresolved_lazy(context: str = "") -> None:
-    """Raise if any stage_lazy link was never covered by a downstream
-    counted stage_table (r16, VERDICT r15 item 7 — the programmatic
-    half of the stage_lazy contract). Joins in-flight count threads
-    first so an async tail count that WILL cover a link gets to land.
-    The oracle gate calls this after every query, so a future caller
-    who persists an interior link without chaining a counted tail
-    fails the gate instead of re-exposing the round-5 stats-lie
-    broadcast at 100x."""
-    for t in list(_COUNT_THREADS.values()):
-        try:
-            t.join(timeout=600)
-        except Exception:  # noqa: BLE001
-            pass
-    if _LAZY_PENDING:
-        descs = sorted(_LAZY_PENDING.values())
-        _LAZY_PENDING.clear()
+    """Raise if any stage_lazy link was never covered by a counted
+    stage_table on its own thread (r16, VERDICT r15 item 7). Awaits
+    in-flight counts first (`CountInFlight` if one hangs, links left in
+    place), so a tail count that WILL cover a link gets to land. The
+    oracle gate calls this after every query, so an interior link
+    persisted without a counted tail fails the gate instead of
+    re-exposing the round-5 stats-lie broadcast at 100x."""
+    await_staged()
+    with _LOCK:
+        descs = sorted(d for _, d in _LAZY)
+        _LAZY.clear()
+    if descs:
         raise AssertionError(
             f"stage_lazy link(s) never covered by a counted stage_table"
             f"{' after ' + context if context else ''}: {descs} — chain "
-            f"a stage_table tail (its count materializes the link) or "
-            f"use stage_table directly")
+            f"a stage_table tail on the same thread (its count "
+            f"materializes the link) or use stage_table directly")
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

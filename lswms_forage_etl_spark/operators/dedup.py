@@ -580,11 +580,9 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
 
     tok = sets.select("rep", F.explode("sh64").alias("s64"))
     # STAGED: dfreq is corpus-sized (near one row per distinct shingle)
-    # but its post-agg estimate lies small — see docstring
-    # chained async counts (r15, the lm.py chain discipline): dfreq
-    # derives from marked and prefix from dfreq — unchained, each
-    # async count races its parent's and re-evaluates the parent's
-    # whole subtree (the shingle-hash pass) from parquet
+    # but its post-agg estimate lies small — see docstring. prefix's
+    # count waits for dfreq's (counts chain per thread, lifecycle rule
+    # 1), so it reads dfreq's materialized cache
     dfreq = stage_table(
         tok.groupBy("s64").agg(F.count(F.lit(1)).alias("dfq")))
 
@@ -601,12 +599,12 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     # self-join (round-4 lesson: persist before self-joining)
     prefix = stage_table(
         ranked.where(F.col("pos") <= p)
-        .select("rep", "s64", "n", "pos"), after=dfreq)
+        .select("rep", "s64", "n", "pos"))
 
     if fan_budget is not None:
         # the estimate collect would otherwise race prefix's async
         # count thread and evaluate the chain twice
-        await_staged(prefix)
+        await_staged()
         est_row = (prefix.groupBy("s64")
                    .agg(F.count(F.lit(1)).alias("c"))
                    .agg(F.sum(F.expr("c * (c - 1) div 2"))
@@ -1036,11 +1034,7 @@ def simhash_near_dups(sigs: DataFrame, id_col: str = "doc_id",
     # duplicate_clusters).
     from lswms_forage_etl_spark import lifecycle
 
-    spark = sigs.sparkSession
-    _ids0 = lifecycle.persistent_rdd_ids(spark)
-    sig_tbl = sigs.localCheckpoint(eager=False)
-    _ck_ids = lifecycle.persistent_rdd_ids(spark) - _ids0
-    lifecycle.track(lambda: lifecycle.unpersist_rdd_ids(spark, _ck_ids))
+    sig_tbl = _ckpt_tracked(sigs, eager=False)
     uniq = sig_tbl.select("simhash").distinct()
     # lazy persist is SAFE here (no eager stage_table): sig_tbl is a
     # LogicalRDD whose unknown size defaults to defaultSizeInBytes, so

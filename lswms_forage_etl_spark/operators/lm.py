@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lswms_forage_etl_spark.lifecycle import await_staged, stage_table
+from lswms_forage_etl_spark.lifecycle import stage_table
 from lswms_forage_etl_spark.operators.dedup import _spread
 
 BACKOFF_PENALTY_BITS = 4
@@ -80,7 +80,7 @@ def _lang_bitlen_expr(tot: DataFrame, lang_col: str,
     probe showed its broadcast BUILT ONCE PER REFERENCING JOIN (twin
     build jobs behind text_perplexity_bucket) plus an aggregation
     exchange per build, all to attach one small int per language. The
-    collect runs over the warm staged cache post-await (catalog-scale:
+    collect runs over the warm, sync-staged cache (catalog-scale:
     one row per language). Python's ``int.bit_length`` equals the
     engines' ``length(bin(n))`` for n >= 1, and totals are >= 1 by
     construction; a language absent from the train slice returns NULL
@@ -142,8 +142,11 @@ def surprisal_per_doc(docs: DataFrame, train_sources: list[str],
     — one shuffle on the doc key."""
     bg = _doc_bigrams(docs, id_col, text_col, [lang_col, source_col])
     train = bg.where(F.col(source_col).isin(list(train_sources)))
+    # sync: the tot collect below (_lang_bitlen_expr) must read a warm
+    # c2 cache, and it runs during construction, before the registry's
+    # barrier (lifecycle rule 2)
     c2 = stage_table(train.groupBy(lang_col, "a", "b")
-                     .agg(F.count(F.lit(1)).alias("c2")))
+                     .agg(F.count(F.lit(1)).alias("c2")), sync=True)
     # r16 NOTE (VERDICT r15 item 8, tried and REJECTED): folding the
     # c1 aggregation into `seen` as a window over c2
     # (sum("c2").over(partitionBy(lang, a))) removes one Exchange and a
@@ -160,7 +163,6 @@ def surprisal_per_doc(docs: DataFrame, train_sources: list[str],
             .select(lang_col, "a", "b",
                     (_bitlen(F.col("c1")) - _bitlen(F.col("c2")))
                     .alias("s_seen")))
-    await_staged(c2)   # consumers must find warm blocks (see lifecycle)
     # tot attaches ONE small int per language — inline it as a literal
     # map lookup instead of two broadcast-join builds (_lang_bitlen_expr
     # docstring; the collect reads the warm staged c2 cache). The old
@@ -303,7 +305,6 @@ def trigram_kn_surprisal(docs: DataFrame, train_sources: list[str],
                  _bitlen(F.col("c12")) - _bitlen(F.col("c3") - 1))
           .otherwise(F.coalesce(_bitlen(F.col("c12"))
                                 - _bitlen(F.col("n3t")), F.lit(0)) + s2))
-    await_staged(c3)   # consumers must find warm blocks (see lifecycle)
     return (j.select(id_col, lang_col, s3.alias("s"))
             .groupBy(id_col, lang_col)
             .agg(F.count(F.lit(1)).alias("n_trigrams"),
@@ -395,8 +396,9 @@ def fivegram_kn_surprisal(docs: DataFrame, train_sources: list[str],
     # effect in the SAME job, so the per-link count jobs (4 serialized
     # driver round-trips; before that, un-chained async counts raced
     # and re-ran the 5-gram explode 4x — the round-6 lazy-race lesson)
-    # collapse to one. No join is planned before `await_staged(cont2)`
-    # lands, so the interior tables never expose lazy stats.
+    # collapse to one. No join is planned before cont2's count lands
+    # (the registry's barrier, lifecycle rule 2), so the interior
+    # tables never expose lazy stats.
     from lswms_forage_etl_spark.lifecycle import stage_lazy
     cont4 = stage_lazy(c5.groupBy(lang_col, "b", "c", "d", "e")
                        .agg(F.count(F.lit(1)).alias("n1p_bcde")))
@@ -451,7 +453,6 @@ def fivegram_kn_surprisal(docs: DataFrame, train_sources: list[str],
                  _bitlen(F.col("c1234")) - _bitlen(F.col("c5") - 1))
           .otherwise(F.coalesce(_bitlen(F.col("c1234"))
                                 - _bitlen(F.col("n5t")), F.lit(0)) + s4))
-    await_staged(cont2)  # chain tail: c5/cont4/cont3/cont2 all warm
     return (j.select(id_col, lang_col, s5.alias("s"))
             .groupBy(id_col, lang_col)
             .agg(F.count(F.lit(1)).alias("n_fivegrams"),

@@ -68,12 +68,6 @@ def rasterize_points(points: DataFrame, spark: SparkSession,
     )
 
 
-def write_raster_partitions(cells: DataFrame, path: str) -> None:
-    """S11 engine-native sink: parquet partitioned by date — each partition
-    is one 'raster'; partition pruning replaces per-file globbing."""
-    cells.write.mode("overwrite").partitionBy("date").parquet(path)
-
-
 def manifest(cells: DataFrame) -> DataFrame:
     """S17 — one filename per new raster date (rasterize.py:67-77)."""
     return cells.select("date").distinct().select(

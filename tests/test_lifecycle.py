@@ -4,6 +4,8 @@ after their consuming action, and assert_no_cached_rdds catches anything
 that slipped through — including RDD-level localCheckpoint storage that
 spark.catalog.clearCache() cannot free."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,11 +72,11 @@ def test_untracked_persist_trips_the_gate(spark):
 
 
 def test_chained_stage_counts_and_await(spark):
-    """r15: stage_table(after=parent) must run the child's async count
-    AFTER the parent's (so the child reads the parent's materialized
-    cache instead of re-evaluating its subtree), and await_staged must
-    block until the chain tail's count has landed — consumers of the
-    returned frame always find warm blocks."""
+    """Counts chain per thread: the child's async count runs AFTER the
+    parent's (so the child reads the parent's materialized cache), and
+    the argument-free await_staged barrier blocks until the chain
+    tail's count has landed — consumers of the returned frame always
+    find warm blocks."""
     lifecycle.release_tracked()
     spark.catalog.clearCache()
     base = spark.range(2000).select(
@@ -83,18 +85,18 @@ def test_chained_stage_counts_and_await(spark):
         base.groupBy("k").agg(F.count(F.lit(1)).alias("n")), sync=False)
     child = lifecycle.stage_table(
         parent.groupBy((F.col("k") % 2).alias("p"))
-        .agg(F.sum("n").alias("s")), sync=False, after=parent)
-    lifecycle.await_staged(child)
+        .agg(F.sum("n").alias("s")), sync=False)
+    lifecycle.await_staged()
     # after await, BOTH caches must hold live blocks (the chain ran
-    # parent-first, and the tail join covers the whole chain)
+    # parent-first, and the barrier covers the whole chain)
     live = lifecycle.persistent_rdd_ids(spark)
     assert len(live) >= 2
     got = {r["p"]: r["s"] for r in child.collect()}
     assert got == {0: 1143, 1: 857}
     lifecycle.release_tracked()
     lifecycle.assert_no_cached_rdds(spark, context="chain-test")
-    # await on an unstaged/foreign frame is a no-op
-    lifecycle.await_staged(base)
+    # the barrier with nothing in flight is a no-op
+    lifecycle.await_staged()
 
 
 def test_stage_lazy_chain_tail_materializes_parents(spark):
@@ -114,7 +116,7 @@ def test_stage_lazy_chain_tail_materializes_parents(spark):
     tail = lifecycle.stage_table(
         mid.groupBy((F.col("m") % 2).alias("p"))
         .agg(F.sum("s").alias("t")), sync=False)
-    lifecycle.await_staged(tail)
+    lifecycle.await_staged()
     # the tail's single count job must have populated ALL THREE caches
     live = lifecycle.persistent_rdd_ids(spark)
     assert len(live) >= 3
@@ -125,6 +127,155 @@ def test_stage_lazy_chain_tail_materializes_parents(spark):
     lifecycle.assert_no_unresolved_lazy(context="stage-lazy-test")
     lifecycle.release_tracked()
     lifecycle.assert_no_cached_rdds(spark, context="stage-lazy-test")
+
+
+def test_async_chain_evaluates_parent_once(spark):
+    """Two chained async stage_table counts, no ordering argument: the
+    child's count waits for the parent's (same thread), so the parent's
+    subtree — a slow UDF that counts its calls in an accumulator — runs
+    exactly once per row across both counts and the consuming action."""
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def slow_twice(x):
+        import time
+        time.sleep(0.002)
+        calls.add(1)
+        return x * 2
+
+    n = 400
+    parent = lifecycle.stage_table(
+        spark.range(n, numPartitions=4)
+        .select("id", slow_twice("id").alias("v")), sync=False)
+    child = lifecycle.stage_table(
+        parent.groupBy((F.col("v") % 3).alias("r"))
+        .agg(F.count(F.lit(1)).alias("c")), sync=False)
+    lifecycle.await_staged()
+    assert calls.value == n
+    assert sum(r["c"] for r in child.collect()) == n
+    assert calls.value == n
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="single-eval-test")
+
+
+def test_lazy_link_is_not_covered_from_another_thread(spark):
+    """A stage_lazy link is covered only by the next count staged on
+    its OWN thread: a count landing on another thread leaves it
+    pending, so the backstop fails the query."""
+    import threading
+
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    base = spark.range(200).select((F.col("id") % 5).alias("k"))
+    t = threading.Thread(target=lambda: lifecycle.stage_lazy(
+        base.groupBy("k").agg(F.count(F.lit(1)).alias("n"))))
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive()
+    lifecycle.stage_table(base.groupBy("k").agg(F.max("k").alias("m")),
+                          sync=False)
+    with pytest.raises(AssertionError, match="never covered"):
+        lifecycle.assert_no_unresolved_lazy(context="cross-thread-test")
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="cross-thread-test")
+
+
+def test_concurrent_staging_keeps_every_link(spark):
+    """Stress: more staging threads than cores, interleaving stage_lazy
+    appends with landing counts' coverage under a tiny switch interval.
+    Every link of a thread with a counted tail is covered; every link
+    of a thread without one stays pending — a lost update would drop
+    or resurrect one."""
+    import sys
+    import threading
+
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    n_threads, n_links = 8, 3
+    start = threading.Barrier(n_threads)
+
+    def stage(i: int) -> None:
+        start.wait(timeout=60)
+        for j in range(n_links):
+            lifecycle.stage_lazy(spark.range(10 + i * n_links + j))
+        if i % 2 == 0:
+            lifecycle.stage_table(spark.range(100 + i), sync=False)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=stage, args=(i,))
+                   for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    lifecycle.await_staged()
+    assert len(lifecycle._LAZY) == n_threads // 2 * n_links
+    with pytest.raises(AssertionError, match="never covered"):
+        lifecycle.assert_no_unresolved_lazy(context="stress-test")
+    assert lifecycle.release_tracked() == (
+        n_threads * n_links + n_threads // 2)
+    lifecycle.assert_no_cached_rdds(spark, context="stress-test")
+
+
+def test_hung_count_raises_in_flight_and_keeps_evidence(spark,
+                                                        monkeypatch):
+    """A count that has not landed when the barrier's timeout runs out
+    raises a distinct "count still in flight" error (an AssertionError,
+    so gates count it as a failure) — not "never covered" — and the
+    pending stage_lazy evidence survives it."""
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+
+    @F.udf("long")
+    def sleepy(x):
+        import time
+        time.sleep(1.0)
+        return x
+
+    lifecycle.stage_table(
+        spark.range(4, numPartitions=1).select(sleepy("id").alias("v")),
+        sync=False)
+    # staged AFTER the slow count on this thread, so nothing covers it
+    lifecycle.stage_lazy(spark.range(10).groupBy().count())
+    monkeypatch.setattr(lifecycle, "COUNT_TIMEOUT_S", 0.2)
+    with pytest.raises(lifecycle.CountInFlight,
+                       match="count still in flight"):
+        lifecycle.await_staged()
+    with pytest.raises(AssertionError, match="count still in flight"):
+        lifecycle.assert_no_unresolved_lazy(context="hang-test")
+    monkeypatch.setattr(lifecycle, "COUNT_TIMEOUT_S", 600.0)
+    # the in-flight errors left the pending link in place
+    with pytest.raises(AssertionError, match="never covered"):
+        lifecycle.assert_no_unresolved_lazy(context="hang-test")
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="hang-test")
+
+
+def test_registry_query_returns_with_no_job_in_flight(spark):
+    """Every registry entry ends construction with the staging barrier:
+    right after ann_ivfpq_topk returns, none of its staging counts (the
+    probed `lists` table's among them) is still running."""
+    import __spark_entry__ as entrymod
+    from test_testdata_schema import SF_DIR
+
+    if not os.path.isdir(SF_DIR):
+        pytest.skip(f"{SF_DIR} not present")
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    df = entrymod.queries()["ann_ivfpq_topk"](spark, SF_DIR)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # job-end events seen
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert len(df.collect()) == 10
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="ann_ivfpq_topk")
 
 
 def test_uncovered_stage_lazy_trips_the_backstop(spark):

@@ -88,3 +88,39 @@ def test_allowlisted_empty_query_passes(gate, capsys):
     out = capsys.readouterr().out
     assert rc == 0
     assert "PASS  stub_query: 0 rows" in out
+
+
+class _UncoveredLazyEntry(_StubEntry):
+    """A first query that leaves a stage_lazy link uncovered, then the
+    normal stub query."""
+
+    def __init__(self):
+        super().__init__(empty=False)
+
+    def queries(self):
+        from lswms_forage_etl_spark import lifecycle
+
+        def uncovered(spark, sf_dir):
+            df = spark.read.parquet(f"{sf_dir}/region.parquet")
+            lifecycle.stage_lazy(df.groupBy("r_regionkey").count())
+            return df.selectExpr("r_regionkey", "r_name")
+        return {"uncovered": uncovered, **super().queries()}
+
+    def oracle_sql(self):
+        sql = super().oracle_sql()["stub_query"]
+        return {"uncovered": sql, "stub_query": sql}
+
+
+def test_lifecycle_failure_counts_and_gate_continues(gate, capsys, spark):
+    """A lifecycle violation is one FAIL for its own query; the gate
+    releases, then grades the next query instead of aborting."""
+    from lswms_forage_etl_spark import lifecycle
+
+    rc = gate(_UncoveredLazyEntry())
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert "FAIL  uncovered: lifecycle: stage_lazy link(s) never covered" \
+        in out
+    assert "PASS  stub_query" in out
+    assert "1 pass, 1 fail" in out
+    lifecycle.assert_no_cached_rdds(spark, context="gate-test")

@@ -112,11 +112,31 @@ def type_problems(con, sql, spark_dtypes):
     return out
 
 
+def lifecycle_problems(spark, name: str) -> list[str]:
+    """The per-query lifecycle gate: an uncovered stage_lazy link
+    (checked before release clears it), a count still in flight, or a
+    cached block left after release (a persist that skipped
+    lifecycle.track). Always releases, so one offender fails only its
+    own query."""
+    from lswms_forage_etl_spark import lifecycle
+
+    problems = []
+    try:
+        lifecycle.assert_no_unresolved_lazy(context=name)
+    except AssertionError as e:
+        problems.append(str(e))
+    lifecycle.release_tracked()
+    try:
+        lifecycle.assert_no_cached_rdds(spark, context=name)
+    except AssertionError as e:
+        problems.append(str(e))
+    return problems
+
+
 def main():
     import duckdb
     import __spark_entry__ as entrymod
     from lswms_forage_etl_spark import get_spark
-    from lswms_forage_etl_spark import lifecycle
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -134,28 +154,20 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        problems = []
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             sdtypes = sdf.dtypes
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            problems.append(f"spark error: {e}")
+        problems += [f"lifecycle: {p}"
+                     for p in lifecycle_problems(spark, name)]
+        if problems:
+            print(f"FAIL  {name}: {'; '.join(problems)}")
             n_fail += 1
             continue
-        finally:
-            # lifecycle gate (VERDICT r4 item 6): every operator persist /
-            # localCheckpoint must have been registered via lifecycle.track;
-            # release them and then assert NOTHING still holds cached
-            # blocks (clearCache would mask DF-level leaks, and cannot
-            # free RDD-level localCheckpoint blocks at all)
-            # r16 stage_lazy backstop (VERDICT r15 item 7): a lazy
-            # interior link never covered by a counted chain tail is a
-            # latent round-5 stats-lie — fail loudly BEFORE release
-            # clears the registry
-            lifecycle.assert_no_unresolved_lazy(context=name)
-            lifecycle.release_tracked()
-            lifecycle.assert_no_cached_rdds(spark, context=name)
         if not srows and name not in EMPTY_OK:
             print(f"FAIL  {name}: trivially empty (0 spark rows — an "
                   f"empty result hash-passes vacuously; add to EMPTY_OK "
